@@ -24,6 +24,12 @@ class Mldb:
         self.ctx = MldbContext(spark)
         self.functions = FunctionRegistry()
         self._datasets: dict[str, DataFrame] = {}
+        # sparse.mutable datasets under construction: id -> recorded
+        # (row, column, value, ts) cells, registered at commit
+        self._mutable: dict[str, list[tuple]] = {}
+        # stored procedure configs and their latest completed run
+        self._procedures: dict[str, dict] = {}
+        self._runs: dict[str, dict] = {}
 
     # -- datasets -----------------------------------------------------------
 
@@ -42,6 +48,14 @@ class Mldb:
 
     def datasets(self) -> list[str]:
         return sorted(self._datasets)
+
+    def dataset_info(self, name: str) -> dict:
+        """GET /v1/datasets/<name>: the columns `SELECT *` returns and
+        the row count, read from the dialect's registered view — so a
+        committed sparse.mutable dataset reports its wide GET_LATEST
+        columns and rows, not the raw cell triples it was built from."""
+        view = self.ctx.view(name)
+        return {"columns": view.columns, "rowCount": view.count()}
 
     # -- queries ------------------------------------------------------------
 
@@ -557,7 +571,7 @@ class Mldb:
         sparse.mutable (the reference's recordRow/record_rows path):
         each row is {rowName, columns: [[col, value, ts], ...]}.
         Empty row/column names are config errors (MLDB-460)."""
-        buf = getattr(self, "_mutable", {}).get(dataset_id)
+        buf = self._mutable.get(dataset_id)
         if buf is None:
             raise KeyError(
                 f"dataset {dataset_id!r} is not a mutable dataset "
@@ -640,7 +654,7 @@ class Mldb:
         semantics; GET_LATEST view + temporal_* family apply)."""
         import datetime as _dt
 
-        buf = getattr(self, "_mutable", {}).pop(dataset_id, None)
+        buf = self._mutable.pop(dataset_id, None)
         if buf is None:
             raise KeyError(f"dataset {dataset_id!r} is not under construction")
 
@@ -832,7 +846,6 @@ class Mldb:
         procedure runs via POST .../runs)."""
         config = dict(config)
         config["id"] = proc_id
-        self._procedures = getattr(self, "_procedures", {})
         self._procedures[proc_id] = config
         params = config.get("params", {})
         if params.get("runOnCreation", False):
@@ -846,7 +859,6 @@ class Mldb:
         """POST /v1/procedures/<id>/runs: execute a stored procedure
         (MLDB-951's runOnCreation=False flow). A run body's params
         override the stored config's per key (MLDBFB-208)."""
-        self._procedures = getattr(self, "_procedures", {})
         if proc_id not in self._procedures:
             raise KeyError(f"unknown procedure {proc_id!r}")
         config = dict(self._procedures[proc_id])
@@ -861,7 +873,6 @@ class Mldb:
         # only COMPLETED runs register (MLDB-2112: /runs of a
         # procedure whose only run failed is 404 — the failed attempt
         # propagates its error and leaves no run record)
-        self._runs = getattr(self, "_runs", {})
         self._runs[proc_id] = {
             "runStarted": started,
             "runFinished": _dt.datetime.utcnow().isoformat() + "Z",
@@ -869,12 +880,19 @@ class Mldb:
         }
         return status
 
+    def procedure(self, proc_id: str) -> dict:
+        """GET /v1/procedures/<id>: the stored config — it survives a
+        FAILED runOnCreation (MLDB-2112: the broken procedure is still
+        GETtable)."""
+        if proc_id not in self._procedures:
+            raise KeyError(f"unknown procedure {proc_id!r}")
+        return self._procedures[proc_id]
+
     def latest_run(self, proc_id: str) -> dict:
         """GET /v1/procedures/<id>/latestrun (MLDB-1359)."""
-        runs = getattr(self, "_runs", {})
-        if proc_id not in runs:
+        if proc_id not in self._runs:
             raise KeyError(f"no runs for procedure {proc_id!r}")
-        return runs[proc_id]
+        return self._runs[proc_id]
 
     def create_entity(self, kind: str, config: dict) -> dict:
         """createEntity procedure (builtin/basic_procedures.cc:194-230):
@@ -908,14 +926,13 @@ class Mldb:
             # CREATE is not idempotent: a second create at the same id
             # errors (MLDB-312); overwriting goes through PUT
             # (MLDB-748's overwrite semantics)
-            if eid in self._datasets or eid in getattr(self, "_mutable", {}):
+            if eid in self._datasets or eid in self._mutable:
                 raise ValueError(f"dataset entry '{eid}' already exists")
             if etype in ("sparse.mutable", "beh.mutable", "beh.binary.mutable"):
                 # an empty MUTABLE dataset: rows accumulate through
                 # record_rows() / POST /v1/datasets/<id>/rows and
                 # become queryable at commit (the reference's
                 # create/record/commit lifecycle)
-                self._mutable = getattr(self, "_mutable", {})
                 self._mutable[eid] = []
                 return {
                     "kind": kind,

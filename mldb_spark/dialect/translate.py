@@ -3192,6 +3192,87 @@ class MldbContext:
     def query(self, sql: str, params: dict[str, object] | None = None) -> DataFrame:
         return self._statement(parse_statement(sql), params or {})
 
+    def view(self, name: str) -> DataFrame:
+        """A registered dataset as `SELECT *` sees it: without the
+        engine-internal columns (a cells dataset: the wide GET_LATEST
+        view without its __cellsRow)."""
+        df = self._table(name)[0]
+        return df.drop(*[c for c in df.columns if _hidden_col(c)])
+
+    def cell_tuples(
+        self, sql: str, limit: int
+    ) -> "list[tuple[str, list[tuple]]] | None":
+        """Every timestamped (column, value, ts) tuple of each selected
+        cell, per surviving row name in the statement's own order, when
+        `sql` is a plain SELECT */<columns> FROM <cells dataset>
+        [WHERE …] [ORDER BY …] [LIMIT …]; None for anything else.
+
+        The reference's FULL format over a cells dataset returns ALL
+        tuples of a cell, not just the GET_LATEST value (MLDB-605/679:
+        recording x at 3 timestamps → a 3-tuple columns list; 'we
+        return all tuples of a column for consistency, see MLDB-1370');
+        computed items keep latest-value semantics, so they return
+        None and the caller renders the wide result."""
+        import dataclasses
+
+        try:
+            stm = parse_statement(sql)
+        except Exception:
+            return None
+        if (
+            not isinstance(stm.from_, ast.TableRef)
+            or stm.from_.name not in self._cells
+            or stm.group_by
+            or stm.named is not None
+            or stm.when is not None
+        ):
+            return None
+        info = self._cells[stm.from_.name]
+        want: "list[str] | None" = []
+        for it in stm.select:
+            if isinstance(it, ast.Wildcard) and not it.qualifier:
+                want = None  # every column
+                break
+            if (
+                isinstance(it, ast.ExprItem)
+                and isinstance(it.expr, ast.ColumnRef)
+                and it.alias is None
+            ):
+                want.append(it.expr.name)
+            else:
+                return None
+        cols = info["columns"] if want is None else [
+            c for c in info["columns"] if c in want
+        ]
+        rn_stm = dataclasses.replace(
+            stm,
+            select=[
+                ast.ExprItem(
+                    ast.FunctionCall("rowname", [], raw="rowName"), "__rn"
+                )
+            ],
+        )
+        try:
+            names = [
+                r["__rn"]
+                for r in self._statement(rn_stm, {}).limit(limit).collect()
+            ]
+        except Exception:
+            return None
+        row, column, value, ts = (
+            info["row"], info["column"], info["value"], info["ts"]
+        )
+        got = (
+            info["cells"]
+            .filter(F.col(row).isin(names) & F.col(column).isin(cols))
+            .orderBy(row, column, ts)
+            .collect()
+        )
+        by_row: dict = {n: [] for n in names}
+        for r in got:
+            by_row[r[row]].append((r[column], r[value], r[ts]))
+        return [(n, by_row[n]) for n in names]
+
     # -- statement lowering -------------------------------------------------
 
     def _resolve_from(

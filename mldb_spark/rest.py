@@ -2,17 +2,10 @@
 surface (server/mldb_server.cc:209-283; formats
 engine/dataset_collection.cc:60-238). stdlib http.server only.
 
-Routes:
-    GET  /v1/query?q=<sql>[&format=full|aos|soa|table][&limit=N]
-         [&rowNames=1][&headers=0]
-    GET  /v1/datasets                 → names
-    GET  /v1/datasets/<name>          → {columns, rowCount}
-    PUT  /v1/datasets/<name>  {type, params}     → createEntity
-    PUT  /v1/functions/<name> {type, params}     → createEntity
-    GET  /v1/functions                → names
-    POST /v1/procedures       {type, params}     → createEntity
-                                       (runs on creation, like the
-                                        reference's runOnCreation)
+Routes: `MldbRestServer.ROUTES` is the single listing — a table of
+(verb, path pattern) → handler served by one dispatcher, which reads
+and parses the JSON body once and turns every error into a status
+code in one place (a malformed body is a 400).
 
 Formats follow dataset_collection.cc: `full` (per-row sparse
 [column, value, timestamp] triples; timestamp comes from a `ts`
@@ -32,23 +25,16 @@ from __future__ import annotations
 
 import json
 import threading
+from dataclasses import dataclass
 from datetime import date, datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from types import SimpleNamespace
+from typing import Callable, NamedTuple
 from urllib.parse import parse_qs, urlparse
 
 from mldb_spark.api import Mldb
 
 DEFAULT_ROW_CAP = 10_000
-
-
-def _is_expression(src: str) -> bool:
-    """True when a script source is a single evaluable expression
-    (MLDB-255's `'hello, world'` one-liners)."""
-    try:
-        compile(src, "<script>", "eval")
-        return True
-    except SyntaxError:
-        return False
 
 
 def _jsonable(v):
@@ -167,6 +153,116 @@ def render_rows(rows, columns, fmt="full", row_names=False, headers=True):
     raise ValueError(f"unknown format {fmt!r}")
 
 
+
+
+class HttpError(Exception):
+    """An error answer that carries its own status code."""
+
+    def __init__(self, code: int, message: str):
+        super().__init__(message)
+        self.code = code
+
+
+@dataclass
+class Request:
+    verb: str
+    args: list[str]  # the path segments matched by `*` (and `**`)
+    query: dict  # query-string parameters; JSON values when redirected
+    body: object  # the parsed JSON body, {} when there is none
+    location: str | None = None  # set when the answer points at a created object
+
+
+class Route(NamedTuple):
+    verb: str
+    path: tuple[str, ...]  # `*` matches one segment, a trailing `**` the rest
+    handler: Callable[["MldbRestServer", Request], object]
+    ok: int  # status of a successful answer
+    missing: int  # status of a KeyError (an unknown entity)
+
+
+def _route(verb, path, handler, ok=200, missing=404) -> Route:
+    return Route(verb, tuple(path.strip("/").split("/")), handler, ok, missing)
+
+
+def _match(pattern: tuple[str, ...], parts: list[str]) -> list[str] | None:
+    """The arguments `parts` binds to `pattern`, or None when it does not
+    match; a trailing `**` binds the rest of the path as one "/…" string."""
+    args = []
+    for i, p in enumerate(pattern):
+        if p == "**":
+            return args + ["/" + "/".join(parts[i:])]
+        if i == len(parts) or p not in ("*", parts[i]):
+            return None
+        if p == "*":
+            args.append(parts[i])
+    return args if len(parts) == len(pattern) else None
+
+
+def _record(write):
+    """A handler for the mutable-dataset record path (the reference's
+    recordRow/commit lifecycle; MLDB-1267 et al.; column-wise and
+    batched variants per MLDB-541): `write(mldb, dataset id, body)`."""
+
+    def handler(app, req):
+        write(app.mldb, req.args[0], req.body)
+        return {}
+
+    return handler
+
+
+class _Handler(BaseHTTPRequestHandler):
+    """Every verb goes through `_dispatch`. Each server subclasses this
+    with its own `app`, so patching one server's do_GET/do_POST/do_PUT
+    leaves the others alone."""
+
+    app: "MldbRestServer"
+
+    def log_message(self, *a):  # quiet
+        pass
+
+    def do_GET(self):
+        self._dispatch("GET")
+
+    def do_POST(self):
+        self._dispatch("POST")
+
+    def do_PUT(self):
+        self._dispatch("PUT")
+
+    def _dispatch(self, verb: str) -> None:
+        url = urlparse(self.path)
+        req = Request(verb, [], {k: v[0] for k, v in parse_qs(url.query).items()}, {})
+        missing = 404
+        try:
+            n = int(self.headers.get("Content-Length") or 0)
+            if n < 0:
+                raise ValueError(f"invalid Content-Length {n}")
+            req.body = json.loads(self.rfile.read(n)) if n else {}
+            route, req.args = self.app.match(verb, url.path)
+            if route is None:
+                raise HttpError(404, f"no route {verb} {url.path}")
+            missing = route.missing
+            code, payload = route.ok, route.handler(self.app, req)
+        except Exception as e:
+            code = e.code if isinstance(e, HttpError) else missing if isinstance(e, KeyError) else 400
+            # every error answer carries BOTH 'error' and 'httpCode'
+            # (MLDB-1260's uniform error format)
+            payload = {"error": str(e), "httpCode": code}
+        self._send(code, payload, req.location)
+
+    def _send(self, code: int, payload, location: str | None) -> None:
+        body = json.dumps(payload, default=str).encode()
+        self.send_response(code)
+        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Length", str(len(body)))
+        if location:
+            # creation responses point at the created object
+            # (MLDB-951's Location check; MLDB-299/305's sync flavor)
+            self.send_header("Location", location)
+        self.end_headers()
+        self.wfile.write(body)
+
+
 class MldbRestServer:
     """In-process REST server bound to an Mldb facade. start() binds
     an ephemeral (or given) port on a daemon thread; stop() shuts it
@@ -179,421 +275,168 @@ class MldbRestServer:
         # python plugins with custom routes (MLDB-444): id -> {routes
         # source, config}
         self.plugins: dict[str, dict] = {}
-        facade = self
-
-        class Handler(BaseHTTPRequestHandler):
-            def log_message(self, *a):  # quiet
-                pass
-
-            def _plugin_route(self, parts, q, verb):
-                """Dispatch /v1/plugins/<id>/routes/<path> into the
-                plugin's routes source (MLDB-444: request.rest_params
-                carries the query args as [k, v] pairs,
-                request.payload the JSON body; set_return is the
-                response). A body-less POST is a 404 when the route
-                source requires a payload (MLDB-2114's contract is a
-                clean error, never a hang)."""
-                plug = facade.plugins.get(parts[2])
-                if plug is None:
-                    self._send(404, {"error": f"unknown plugin {parts[2]!r}"})
-                    return
-                n = int(self.headers.get("Content-Length", 0))
-                raw = self.rfile.read(n) if n else b""
-                try:
-                    payload = json.loads(raw) if raw else None
-                except Exception:
-                    payload = raw.decode("utf-8", "replace")
-
-                class _Req:
-                    rest_params = [[k, v] for k, v in q.items()]
-                    verb_ = verb
-                    remaining = "/" + "/".join(parts[4:])
-                    value = None
-
-                    def set_return(self, v):
-                        _Req.value = v
-
-                _Req.payload = payload
-                try:
-                    ns = {"mldb": facade.mldb, "request": _Req()}
-                    exec(  # noqa: S102 — local plugin route
-                        compile(plug["routes"], "<plugin-route>", "exec"),
-                        ns,
-                    )
-                    self._send(200, _Req.value)
-                except Exception as e:
-                    self._send(400, {"error": f"{type(e).__name__}: {e}"})
-
-            def _send(self, code: int, payload, location: str | None = None) -> None:
-                # every error response carries BOTH 'error' and
-                # 'httpCode' (MLDB-1260's uniform error format)
-                if code >= 400 and isinstance(payload, dict) and "httpCode" not in payload:
-                    payload = {**payload, "httpCode": code}
-                body = json.dumps(payload, default=str).encode()
-                self.send_response(code)
-                self.send_header("Content-Type", "application/json")
-                self.send_header("Content-Length", str(len(body)))
-                if location:
-                    # creation responses point at the created object
-                    # (MLDB-951's Location check; MLDB-299/305's sync
-                    # flavor)
-                    self.send_header("Location", location)
-                self.end_headers()
-                self.wfile.write(body)
-
-            def _body(self) -> dict:
-                n = int(self.headers.get("Content-Length", 0))
-                return json.loads(self.rfile.read(n) or b"{}")
-
-            def do_GET(self):
-                u = urlparse(self.path)
-                q = {k: v[0] for k, v in parse_qs(u.query).items()}
-                parts = [p for p in u.path.split("/") if p]
-                try:
-                    if (
-                        parts[:2] == ["v1", "plugins"]
-                        and len(parts) >= 4
-                        and parts[3] == "routes"
-                    ):
-                        self._plugin_route(parts, q, "GET")
-                        return
-                    if parts[:2] == ["v1", "query"]:
-                        self._send(200, facade.run_query(q))
-                    elif (
-                        parts[:2] == ["v1", "procedures"]
-                        and len(parts) == 4
-                        and parts[3] == "latestrun"
-                    ):
-                        # MLDB-1359: the most recent run's metadata;
-                        # a never-run procedure is 404 (MLDB-2112)
-                        try:
-                            self._send(200, facade.mldb.latest_run(parts[2]))
-                        except KeyError as e:
-                            self._send(404, {"error": str(e)})
-                    elif (
-                        parts[:2] == ["v1", "procedures"]
-                        and len(parts) == 3
-                    ):
-                        # the stored config survives a FAILED
-                        # runOnCreation (MLDB-2112: the broken proc is
-                        # still GETtable)
-                        procs = getattr(facade.mldb, "_procedures", {})
-                        if parts[2] in procs:
-                            self._send(200, procs[parts[2]])
-                        else:
-                            self._send(
-                                404,
-                                {"error": f"unknown procedure {parts[2]!r}"},
-                            )
-                    elif parts[:2] == ["v1", "datasets"] and len(parts) == 2:
-                        self._send(200, facade.mldb.datasets())
-                    elif parts[:2] == ["v1", "datasets"] and len(parts) == 3:
-                        df = facade.mldb.dataset(parts[2])
-                        self._send(
-                            200, {"columns": df.columns, "rowCount": df.count()}
-                        )
-                    elif parts[:2] == ["v1", "functions"] and len(parts) == 2:
-                        self._send(200, facade.mldb.functions.names())
-                    elif (
-                        parts[:2] == ["v1", "functions"]
-                        and len(parts) == 4
-                        and parts[3] == "application"
-                    ):
-                        import json as _json
-
-                        inp = _json.loads(q.get("input", "{}"))
-                        self._send(
-                            200, facade.apply_function_json(parts[2], inp)
-                        )
-                    else:
-                        self._send(404, {"error": f"no route {u.path}"})
-                except KeyError as e:
-                    self._send(404, {"error": str(e)})
-                except Exception as e:
-                    self._send(400, {"error": str(e)})
-
-            def _create(self, kind: str, eid: str | None):
-                cfg = self._body()
-                if not cfg:
-                    # PUT/POST with no body is a clean 400
-                    # (MLDB-1010's "empty payload")
-                    self._send(400, {"error": "empty payload"})
-                    return
-                if eid is not None:
-                    # a body id that CONTRADICTS the path id is a 400
-                    # (MLDB-348's put-with-wrong-id)
-                    if cfg.get("id") not in (None, eid):
-                        self._send(
-                            400,
-                            {
-                                "error": f"config id {cfg['id']!r} does not "
-                                f"match the URI id {eid!r}"
-                            },
-                        )
-                        return
-                    cfg["id"] = eid
-                # POSTed configs without an id get a unique
-                # auto_-prefixed one (MLDB-983's create-dataset-ids)
-                if "id" not in cfg:
-                    import uuid
-
-                    cfg["id"] = "auto_" + uuid.uuid4().hex[:12]
-                try:
-                    self._send(201, facade.mldb.create_entity(kind, cfg))
-                except Exception as e:
-                    self._send(400, {"error": str(e)})
-
-            def do_PUT(self):
-                parts = [p for p in urlparse(self.path).path.split("/") if p]
-                if parts[:2] == ["v1", "datasets"] and len(parts) == 3:
-                    self._create("dataset", parts[2])
-                elif parts[:2] == ["v1", "functions"] and len(parts) == 3:
-                    self._create("function", parts[2])
-                elif parts[:2] == ["v1", "plugins"] and len(parts) == 3:
-                    # python plugin with custom ROUTES
-                    # (MLDB-444_python_perform_default_args.py): store
-                    # the routes source; requests to
-                    # /v1/plugins/<id>/routes/<path> exec it with a
-                    # `request` carrying rest_params/payload/verb
-                    try:
-                        body = self._body()
-                        if body.get("type") != "python":
-                            self._send(
-                                400,
-                                {"error": "only python plugins supported"},
-                            )
-                            return
-                        src = (body.get("params", {})
-                               .get("source", {}) or {})
-                        facade.plugins[parts[2]] = {
-                            "routes": src.get("routes", ""),
-                            "config": body,
-                        }
-                        main = src.get("main")
-                        if main:
-                            ns = {"mldb": facade.mldb}
-                            exec(compile(main, "<plugin>", "exec"), ns)  # noqa: S102
-                        self._send(201, {"config": body})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts[:2] == ["v1", "procedures"] and len(parts) == 3:
-                    # store + optional runOnCreation (MLDB-951)
-                    try:
-                        body = self._body()
-                        if not body:
-                            self._send(400, {"error": "empty payload"})
-                            return
-                        self._send(
-                            201, facade.mldb.put_procedure(parts[2], body)
-                        )
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif (
-                    parts[:2] == ["v1", "procedures"]
-                    and len(parts) == 4
-                    and parts[3] == "runs"
-                ):
-                    # PUT of a run needs a run NAME (MLDB-326)
-                    self._send(404, {"error": "PUT of a run needs a run name"})
-                elif (
-                    parts[:2] == ["v1", "procedures"]
-                    and len(parts) == 5
-                    and parts[3] == "runs"
-                ):
-                    # named-run PUT (MLDB-326's /runs/<id>); a body id
-                    # contradicting the URI id is a 400 (MLDB-348 rule)
-                    try:
-                        body = self._body()
-                        if body.get("id") not in (None, parts[4]):
-                            self._send(
-                                400,
-                                {"error": "run config id does not match URI"},
-                            )
-                            return
-                        self._send(
-                            201,
-                            facade.mldb.run_procedure(
-                                parts[2], body.get("params")
-                            ),
-                        )
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                else:
-                    self._send(404, {"error": "PUT supports /v1/datasets/<id>, /v1/functions/<id> and /v1/procedures/<id>"})
-
-            def do_POST(self):
-                u = urlparse(self.path)
-                parts = [p for p in u.path.split("/") if p]
-                if (
-                    parts[:2] == ["v1", "plugins"]
-                    and len(parts) >= 4
-                    and parts[3] == "routes"
-                ):
-                    q = {k: v[0] for k, v in parse_qs(u.query).items()}
-                    self._plugin_route(parts, q, "POST")
-                    return
-                if (
-                    parts[:2] == ["v1", "procedures"]
-                    and len(parts) == 4
-                    and parts[3] == "runs"
-                ):
-                    # POST /v1/procedures/<id>/runs (MLDB-951); run
-                    # params override the stored config (MLDBFB-208)
-                    try:
-                        body = {}
-                        try:
-                            body = self._body()
-                        except Exception:
-                            pass
-                        self._send(
-                            201,
-                            facade.mldb.run_procedure(
-                                parts[2], body.get("params")
-                            ),
-                            location=f"/v1/procedures/{parts[2]}/latestrun",
-                        )
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts[:2] == ["v1", "procedures"]:
-                    self._create("procedure", None)
-                elif (
-                    parts[:2] == ["v1", "datasets"]
-                    and len(parts) == 4
-                    and parts[3] in ("rows", "multirows", "columns",
-                                     "multicolumns", "commit")
-                ):
-                    # mutable-dataset record path (the reference's
-                    # recordRow/commit lifecycle; MLDB-1267 et al.;
-                    # column-wise + batched variants per MLDB-541)
-                    try:
-                        if parts[3] == "rows":
-                            facade.mldb.record_rows(parts[2], [self._body()])
-                            self._send(200, {})
-                        elif parts[3] == "multirows":
-                            # [[rowName, [[col, v, ts], ...]], ...]
-                            facade.mldb.record_rows(
-                                parts[2],
-                                [{"rowName": r[0], "columns": r[1]}
-                                 for r in self._body()],
-                            )
-                            self._send(200, {})
-                        elif parts[3] == "columns":
-                            body = self._body()
-                            facade.mldb.record_column(
-                                parts[2], body["columnName"], body["rows"]
-                            )
-                            self._send(200, {})
-                        elif parts[3] == "multicolumns":
-                            facade.mldb.record_columns(parts[2], self._body())
-                            self._send(200, {})
-                        else:
-                            facade.mldb.commit_dataset(parts[2])
-                            self._send(200, {})
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts == ["v1", "datasets"]:
-                    # POST create with an optional id (MLDB-348/983)
-                    self._create("dataset", None)
-                elif (
-                    parts[:2] == ["v1", "functions"]
-                    and len(parts) == 4
-                    and parts[3] == "application"
-                ):
-                    try:
-                        body = self._body()
-                        self._send(
-                            200,
-                            facade.apply_function_json(
-                                parts[2], body.get("input", body)
-                            ),
-                        )
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts[:2] == ["v1", "query"]:
-                    # query params in the request body
-                    # (MLDB-1717_query_select_in_body.py: the reference
-                    # accepts q in the body as well as the query string)
-                    try:
-                        self._send(200, facade.run_query(self._body()))
-                    except KeyError as e:
-                        self._send(404, {"error": str(e)})
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                elif parts == ["v1", "types", "plugins", "python", "routes", "run"]:
-                    # script-run route (MLDB-255's python flavor; the
-                    # reference's javascript flavor is declared out of
-                    # scope — pyeval/pyscript is the same-contract
-                    # replacement): exec the source with the mldb
-                    # facade in scope; request.set_return() carries
-                    # the result; any error is a clean 400
-                    try:
-                        body = self._body()
-                        src = body.get("source", "")
-
-                        class _Req:
-                            value = None
-
-                            def set_return(self, v):
-                                _Req.value = v
-
-                        ns = {"mldb": facade.mldb, "request": _Req()}
-                        if _is_expression(src):
-                            result = eval(  # noqa: S307 — local script route
-                                compile(src, "<script>", "eval"), ns
-                            )
-                        else:
-                            exec(compile(src, "<script>", "exec"), ns)  # noqa: S102
-                            result = None
-                        if result is None:
-                            result = _Req.value
-                        self._send(200, {"result": result})
-                    except Exception as e:
-                        self._send(
-                            400, {"error": f"{type(e).__name__}: {e}"}
-                        )
-                elif parts == ["v1", "redirect", "get"]:
-                    # POST /v1/redirect/get {target, body}: re-dispatch
-                    # a GET whose parameters ride in a body
-                    # (MLDB-1717's test_as_POST_body)
-                    try:
-                        b = self._body()
-                        target = b.get("target", "")
-                        tparts = [p for p in target.split("/") if p]
-                        if target == "/v1/query":
-                            self._send(200, facade.run_query(b.get("body", {})))
-                        elif (
-                            tparts[:2] == ["v1", "functions"]
-                            and len(tparts) == 4
-                            and tparts[3] == "application"
-                        ):
-                            # function application through the
-                            # redirect (MLDB-2163's test_as_POST_body)
-                            inp = b.get("body", {}).get("input", {})
-                            self._send(
-                                200,
-                                facade.apply_function_json(tparts[2], inp),
-                            )
-                        else:
-                            self._send(
-                                400,
-                                {
-                                    "error": "redirect target must be "
-                                    "/v1/query or a function application"
-                                },
-                            )
-                    except Exception as e:
-                        self._send(400, {"error": str(e)})
-                else:
-                    self._send(404, {"error": "POST supports /v1/procedures and /v1/query"})
-
-        self._server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
+        handler = type("Handler", (_Handler,), {"app": self})
+        self._server = ThreadingHTTPServer(("127.0.0.1", port), handler)
         self._thread: threading.Thread | None = None
+
+    def match(self, verb: str, path: str) -> tuple[Route | None, list[str]]:
+        parts = [p for p in path.split("/") if p]
+        for route in self.ROUTES:
+            if route.verb == verb:
+                args = _match(route.path, parts)
+                if args is not None:
+                    return route, args
+        return None, []
+
+    # -- route handlers: (server, Request) → answer payload -----------------
+
+    def _create(self, req: Request, kind: str):
+        """createEntity from a {type, params} body: PUT at an id, or POST
+        with an optional one (MLDB-348/983; an id-less config gets an
+        auto_ id)."""
+        cfg = req.body
+        if not cfg:
+            raise HttpError(400, "empty payload")  # MLDB-1010
+        if req.args:
+            # a body id that CONTRADICTS the path id is a 400 (MLDB-348)
+            eid = req.args[0]
+            if cfg.get("id") not in (None, eid):
+                raise HttpError(
+                    400, f"config id {cfg['id']!r} does not match the URI id {eid!r}"
+                )
+            cfg["id"] = eid
+        return self.mldb.create_entity(kind, cfg)
+
+    def _put_procedure(self, req: Request):
+        """Store the config, and run it when params.runOnCreation is set
+        (MLDB-951)."""
+        if not req.body:
+            raise HttpError(400, "empty payload")
+        return self.mldb.put_procedure(req.args[0], req.body)
+
+    def _put_run(self, req: Request):
+        """A named run (MLDB-326's /runs/<id>); a body id contradicting
+        the URI id is a 400 (the MLDB-348 rule)."""
+        if req.body.get("id") not in (None, req.args[1]):
+            raise HttpError(400, "run config id does not match URI")
+        return self.mldb.run_procedure(req.args[0], req.body.get("params"))
+
+    def _post_run(self, req: Request):
+        """Run a stored procedure (MLDB-951); run params override the
+        stored config (MLDBFB-208)."""
+        status = self.mldb.run_procedure(req.args[0], req.body.get("params"))
+        req.location = f"/v1/procedures/{req.args[0]}/latestrun"
+        return status
+
+    def _get_query(self, req: Request):
+        return self.run_query(req.query)
+
+    def _get_application(self, req: Request):
+        """?input=<JSON>; through the redirect the input is a JSON value
+        already."""
+        inp = req.query.get("input", {})
+        return self.apply_function_json(
+            req.args[0], json.loads(inp) if isinstance(inp, str) else inp
+        )
+
+    def _redirect_get(self, req: Request):
+        """POST /v1/redirect/get {target, body}: serve a GET whose
+        parameters ride in a body (MLDB-1717's and MLDB-2163's
+        test_as_POST_body); only query and function-application targets."""
+        route, args = self.match("GET", req.body.get("target", ""))
+        if route is None or route.handler not in (
+            MldbRestServer._get_query, MldbRestServer._get_application
+        ):
+            raise HttpError(
+                400, "redirect target must be /v1/query or a function application"
+            )
+        return route.handler(self, Request("GET", args, req.body.get("body", {}), {}))
+
+    def _put_plugin(self, req: Request):
+        """A python plugin with custom ROUTES
+        (MLDB-444_python_perform_default_args.py): store the routes
+        source and run its main."""
+        if req.body.get("type") != "python":
+            raise HttpError(400, "only python plugins supported")
+        src = req.body.get("params", {}).get("source", {}) or {}
+        self.plugins[req.args[0]] = {"routes": src.get("routes", ""), "config": req.body}
+        if src.get("main"):
+            self._exec(src["main"])
+        return {"config": req.body}
+
+    def _plugin_route(self, req: Request):
+        """Run the plugin's routes source: request.rest_params carries the
+        query args as [k, v] pairs, request.payload the JSON body
+        (MLDB-444); a route on an unknown plugin is a 404 (MLDB-2114)."""
+        plugin_id, remaining = req.args
+        if plugin_id not in self.plugins:
+            raise HttpError(404, f"unknown plugin {plugin_id!r}")
+        return self._exec(
+            self.plugins[plugin_id]["routes"],
+            verb=req.verb,
+            remaining=remaining,
+            rest_params=[[k, v] for k, v in req.query.items()],
+            payload=req.body,
+        )
+
+    def _exec(self, src: str, **request):
+        """Run a python source with the facade as `mldb` and a fresh
+        `request` in scope (no state leaks between runs, MLDB-153). A
+        single expression answers its value (MLDB-255's one-liners);
+        otherwise the answer is what the source passed to
+        request.set_return()."""
+        req = SimpleNamespace(value=None, **request)
+        req.set_return = lambda v: setattr(req, "value", v)
+        try:
+            code = compile(src, "<script>", "eval")
+        except SyntaxError:
+            code = compile(src, "<script>", "exec")
+        result = eval(code, {"mldb": self.mldb, "request": req})  # noqa: S307 — local script route
+        return req.value if result is None else result
+
+    # (verb, path, handler, success status, KeyError status); the first
+    # matching row serves the request, anything else is a 404
+    ROUTES = [
+        _route("GET", "/v1/query", _get_query),
+        # query params in the body as well (MLDB-1717_query_select_in_body.py)
+        _route("POST", "/v1/query", lambda s, r: s.run_query(r.body)),
+        _route("POST", "/v1/redirect/get", _redirect_get, 200, 400),
+        _route("GET", "/v1/datasets", lambda s, r: s.mldb.datasets()),
+        _route("POST", "/v1/datasets", lambda s, r: s._create(r, "dataset"), 201, 400),
+        _route("GET", "/v1/datasets/*", lambda s, r: s.mldb.dataset_info(r.args[0])),
+        _route("PUT", "/v1/datasets/*", lambda s, r: s._create(r, "dataset"), 201, 400),
+        _route("POST", "/v1/datasets/*/rows", _record(lambda m, ds, b: m.record_rows(ds, [b]))),
+        # [[rowName, [[col, v, ts], ...]], ...]
+        _route("POST", "/v1/datasets/*/multirows", _record(
+            lambda m, ds, b: m.record_rows(ds, [{"rowName": r[0], "columns": r[1]} for r in b])
+        )),
+        _route("POST", "/v1/datasets/*/columns", _record(
+            lambda m, ds, b: m.record_column(ds, b["columnName"], b["rows"])
+        )),
+        _route("POST", "/v1/datasets/*/multicolumns", _record(lambda m, ds, b: m.record_columns(ds, b))),
+        _route("POST", "/v1/datasets/*/commit", _record(lambda m, ds, b: m.commit_dataset(ds))),
+        _route("GET", "/v1/functions", lambda s, r: s.mldb.functions.names()),
+        _route("PUT", "/v1/functions/*", lambda s, r: s._create(r, "function"), 201, 400),
+        _route("GET", "/v1/functions/*/application", _get_application),
+        _route("POST", "/v1/functions/*/application", lambda s, r: s.apply_function_json(
+            r.args[0], r.body.get("input", r.body)
+        ), 200, 400),
+        # procedures run on POST creation, like the reference's runOnCreation
+        _route("POST", "/v1/procedures", lambda s, r: s._create(r, "procedure"), 201, 400),
+        _route("GET", "/v1/procedures/*", lambda s, r: s.mldb.procedure(r.args[0])),
+        _route("PUT", "/v1/procedures/*", _put_procedure, 201, 400),
+        _route("POST", "/v1/procedures/*/runs", _post_run, 201),
+        _route("PUT", "/v1/procedures/*/runs/*", _put_run, 201),
+        # MLDB-1359; a never-run procedure is a 404 (MLDB-2112)
+        _route("GET", "/v1/procedures/*/latestrun", lambda s, r: s.mldb.latest_run(r.args[0])),
+        _route("PUT", "/v1/plugins/*", _put_plugin, 201, 400),
+        _route("GET", "/v1/plugins/*/routes/**", _plugin_route, 200, 400),
+        _route("POST", "/v1/plugins/*/routes/**", _plugin_route, 200, 400),
+        # script-run route (MLDB-255's python flavor; the reference's
+        # javascript flavor is declared out of scope)
+        _route("POST", "/v1/types/plugins/python/routes/run",
+               lambda s, r: {"result": s._exec(r.body.get("source", ""))}, 200, 400),
+    ]
 
     # -- function application -----------------------------------------------
 
@@ -603,11 +446,9 @@ class MldbRestServer:
         {"output": {...}} — the reference's single-application REST
         surface. Nested input objects become struct columns (json
         read), outputs are the columns the function added."""
-        import json as _json
-
         spark = self.mldb.spark
         df = spark.read.json(
-            spark.sparkContext.parallelize([_json.dumps(input_obj)])
+            spark.sparkContext.parallelize([json.dumps(input_obj)])
         )
         before = set(df.columns)
         out = self.mldb.functions.apply(name, df)
@@ -632,98 +473,24 @@ class MldbRestServer:
         row_names = str(params.get("rowNames", "0")).lower() in ("1", "true")
         headers = str(params.get("headers", "1")).lower() not in ("0", "false")
         if fmt in ("full", ""):
-            full = self._try_cells_full(sql, limit)
-            if full is not None:
-                return full
+            # over a cells dataset FULL returns every timestamped tuple
+            # of a cell, not just the latest value (MLDB-605/679)
+            cells = self.mldb.ctx.cell_tuples(sql, limit)
+            if cells is not None:
+                return [
+                    {
+                        "rowName": name,
+                        "columns": [
+                            [c, _jsonable(v), ts.isoformat() + "Z" if ts is not None else None]
+                            for c, v, ts in tuples
+                        ],
+                    }
+                    for name, tuples in cells
+                ]
         df = self.mldb.query(sql).limit(limit)
         return render_rows(
             df.collect(), df.columns, fmt=fmt, row_names=row_names, headers=headers
         )
-
-    def _try_cells_full(self, sql: str, limit: int):
-        """The reference's FULL format over a cells dataset returns
-        ALL timestamped tuples of each selected cell, not just the
-        GET_LATEST value (MLDB-605/679: recording x at 3 timestamps →
-        a 3-tuple columns list; 'we return all tuples of a column for
-        consistency, see MLDB-1370'). Applies to plain
-        SELECT */<columns> FROM <cells dataset> [WHERE …] [ORDER BY …]
-        [LIMIT …]; everything else falls back to the wide render."""
-        try:
-            from mldb_spark.dialect import ast as _ast
-            from mldb_spark.dialect.parser import parse_statement
-
-            stm = parse_statement(sql)
-        except Exception:
-            return None
-        if (
-            not isinstance(stm.from_, _ast.TableRef)
-            or stm.from_.name not in self.mldb.ctx._cells
-            or stm.group_by
-            or stm.named is not None
-            or stm.when is not None
-        ):
-            return None
-        info = self.mldb.ctx._cells[stm.from_.name]
-        want: "list[str] | None" = []
-        for it in stm.select:
-            if isinstance(it, _ast.Wildcard) and not it.qualifier:
-                want = None  # every column
-                break
-            if (
-                isinstance(it, _ast.ExprItem)
-                and isinstance(it.expr, _ast.ColumnRef)
-                and it.alias is None
-            ):
-                want.append(it.expr.name)
-            else:
-                return None  # computed items: latest-value semantics
-        cols = info["columns"] if want is None else [
-            c for c in info["columns"] if c in want
-        ]
-        # surviving row names in the statement's own order
-        import dataclasses as _dc
-
-        rn_stm = _dc.replace(
-            stm,
-            select=[
-                _ast.ExprItem(
-                    _ast.FunctionCall("rowname", [], raw="rowName"), "__rn"
-                )
-            ],
-        )
-        try:
-            names = [
-                r["__rn"]
-                for r in self.mldb.ctx._statement(rn_stm, {})
-                .limit(limit)
-                .collect()
-            ]
-        except Exception:
-            return None
-        cells = info["cells"]
-        import pyspark.sql.functions as F
-
-        got = (
-            cells.filter(
-                F.col(info["row"]).isin(names)
-                & F.col(info["column"]).isin(cols)
-            )
-            .orderBy(info["row"], info["column"], info["ts"])
-            .collect()
-        )
-        by_row: dict = {n: [] for n in names}
-        for r in got:
-            ts = r[info["ts"]]
-            by_row[r[info["row"]]].append(
-                [
-                    r[info["column"]],
-                    _jsonable(r[info["value"]]),
-                    ts.isoformat() + "Z" if ts is not None else None,
-                ]
-            )
-        return [
-            {"rowName": n, "columns": by_row.get(n, [])} for n in names
-        ]
 
     # -- lifecycle ----------------------------------------------------------
 

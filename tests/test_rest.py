@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import http.client
 import json
 import urllib.request
 
@@ -721,15 +722,116 @@ def test_mldb_1040_invalid_requests(server):
             assert e.code in (400, 404), (path, e.code)
             body = json.loads(e.read())
             assert "error" in body and "httpCode" in body
-    # malformed JSON body
-    req = urllib.request.Request(
-        f"http://127.0.0.1:{server.port}/v1/procedures/bad1040",
-        data=b"{not json",
-        method="PUT",
-        headers={"Content-Type": "application/json"},
-    )
+    _req(server, "PUT", "/v1/datasets/rec1040", {"type": "sparse.mutable"})
+    # a malformed JSON body on every route that takes one
+    for method, path in (
+        ("PUT", "/v1/procedures/bad1040"),
+        ("PUT", "/v1/datasets/bad1040"),
+        ("PUT", "/v1/functions/bad1040"),
+        ("PUT", "/v1/plugins/bad1040"),
+        ("POST", "/v1/procedures"),
+        ("POST", "/v1/datasets"),
+        ("POST", "/v1/query"),
+        ("POST", "/v1/redirect/get"),
+        ("POST", "/v1/datasets/rec1040/rows"),
+    ):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{server.port}{path}",
+            data=b"{not json",
+            method=method,
+            headers={"Content-Type": "application/json"},
+        )
+        try:
+            urllib.request.urlopen(req)
+            raise AssertionError(f"expected 400 for {method} {path}")
+        except urllib.error.HTTPError as e:
+            assert e.code == 400, (method, path, e.code)
+            body = json.loads(e.read())
+            assert body["httpCode"] == 400 and body["error"], (method, path, body)
+    # a Content-Length that is not a number
+    conn = http.client.HTTPConnection("127.0.0.1", server.port, timeout=30)
     try:
-        urllib.request.urlopen(req)
-        raise AssertionError("expected 400")
-    except urllib.error.HTTPError as e:
-        assert e.code == 400
+        conn.putrequest("POST", "/v1/query")
+        conn.putheader("Content-Type", "application/json")
+        conn.putheader("Content-Length", "twelve")
+        conn.endheaders()
+        resp = conn.getresponse()
+        assert resp.status == 400
+        body = json.loads(resp.read())
+        assert body["httpCode"] == 400 and body["error"]
+    finally:
+        conn.close()
+
+
+def test_mutable_dataset_info_reports_the_queryable_view(spark):
+    """GET /v1/datasets/<id> on a committed sparse.mutable dataset
+    reports what queries see — the columns `SELECT *` returns and the
+    number of rows — not the recorded (row, column, value, ts) cells."""
+    from mldb_spark.api import Mldb
+    from mldb_spark.rest import MldbRestServer
+
+    m = Mldb(spark)
+    srv = MldbRestServer(m).start()
+    try:
+        _req(srv, "PUT", "/v1/datasets/info", {"type": "sparse.mutable"})
+        _req(srv, "POST", "/v1/datasets/info/rows",
+             {"rowName": "r1", "columns": [["a", 1, 0], ["b", "x", 0]]})
+        _req(srv, "POST", "/v1/datasets/info/rows",
+             {"rowName": "r2", "columns": [["a", 2, 0]]})
+        _req(srv, "POST", "/v1/datasets/info/commit", {})
+        st, info = _get(srv, "/v1/datasets/info")
+        assert st == 200
+        assert info == {"columns": ["a", "b"], "rowCount": 2}
+        star = m.query("SELECT * FROM info")
+        assert star.columns == info["columns"] and star.count() == 2
+    finally:
+        srv.stop()
+
+
+def test_record_routes_commit_like_row_wise_recording(spark):
+    """POST …/multirows, …/columns and …/multicolumns record the same
+    cells as the row-wise …/rows recording of
+    test_mutable_dataset_record_commit, and each commits to the same
+    queryable dataset: GET_LATEST values and per-cell timestamps."""
+    from mldb_spark.api import Mldb
+    from mldb_spark.rest import MldbRestServer
+
+    writes = {
+        "rows": [
+            {"rowName": "row1", "columns": [["score", 5, 6]]},
+            {"rowName": "row2", "columns": [["score", 1, 5]]},
+        ],
+        "multirows": [
+            [["row1", [["score", 5, 6]]], ["row2", [["score", 1, 5]]]],
+        ],
+        "columns": [
+            {"columnName": "score", "rows": [["row1", 5, 6], ["row2", 1, 5]]},
+        ],
+        "multicolumns": [
+            [["score", [["row1", 5, 6], ["row2", 1, 5]]]],
+        ],
+    }
+    m = Mldb(spark)
+    srv = MldbRestServer(m).start()
+    try:
+        got = {}
+        for route, bodies in writes.items():
+            ds = f"rec_{route}"
+            _req(srv, "PUT", f"/v1/datasets/{ds}", {"type": "sparse.mutable"})
+            for body in bodies:
+                st, _ = _req(srv, "POST", f"/v1/datasets/{ds}/{route}", body)
+                assert st == 200, route
+            _req(srv, "POST", f"/v1/datasets/{ds}/commit", {})
+            got[route] = [
+                (r["rn"], r["score"], r["ts"].isoformat())
+                for r in m.query(
+                    "SELECT rowName() AS rn, score, latest_timestamp({*}) AS ts "
+                    f"FROM {ds} ORDER BY rowName()"
+                ).collect()
+            ]
+        assert [s for _, s, _ in got["rows"]] == [5.0, 1.0]
+        assert got["rows"][0][2].startswith("1970-01-01T00:00:06")
+        for route in ("multirows", "columns", "multicolumns"):
+            assert got[route] == got["rows"], route
+    finally:
+        srv.stop()
