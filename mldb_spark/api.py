@@ -137,7 +137,7 @@ class Mldb:
                         "__rowName",
                     )
                 )
-                named = self.ctx._statement(stm, params or {})
+                named = self.ctx.statement(stm, params or {})
                 if "__rowName" in named.columns:
                     return named, "__rowName"
         except Exception:
@@ -270,14 +270,14 @@ class Mldb:
                     raise ValueError("sql.expression takes plain select items")
                 if (
                     isinstance(it.expr, _ast.FunctionCall)
-                    and self.ctx._lookup_function(it.expr.name) is not None
+                    and self.ctx.lookup_function(it.expr.name) is not None
                 ):
-                    df = self.ctx._lookup_function(it.expr.name)(df)
+                    df = self.ctx.lookup_function(it.expr.name)(df)
                     continue
                 if (
                     isinstance(it.expr, _ast.Index)
                     and isinstance(it.expr.operand, _ast.FunctionCall)
-                    and self.ctx._lookup_function(it.expr.operand.name)
+                    and self.ctx.lookup_function(it.expr.operand.name)
                     is not None
                     and isinstance(it.expr.key, _ast.Literal)
                 ):
@@ -300,7 +300,7 @@ class Mldb:
                                     fname, abinder.bind(fexpr)
                                 )
                                 arg_tmp.append(fname)
-                    df = self.ctx._lookup_function(inner.name)(df)
+                    df = self.ctx.lookup_function(inner.name)(df)
                     key = str(it.expr.key.value)
                     out_name = it.alias or _expr_name(it.expr, i)
                     if key in df.columns and out_name != key:
@@ -1111,8 +1111,7 @@ class Mldb:
                     self.transform(sql, out_id)
                 finally:
                     self._datasets.pop(tmp_id, None)
-                    self.ctx._datasets.pop(tmp_id, None)
-                    self.ctx._meta.pop(tmp_id, None)
+                    self.ctx.drop(tmp_id)
                 status = {
                     "outputDataset": out_id,
                     "rowCount": self.dataset(out_id).count(),

@@ -22,7 +22,9 @@ Semantics carried over:
 
 from __future__ import annotations
 
+import itertools
 import re
+import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -793,6 +795,28 @@ def _sortable_key(col: Column, dt: str) -> Column:
     return F.when(col.isNull(), mk(0)).otherwise(key)
 
 
+# functions whose answer can change between two evaluations over the
+# same data: never constant, and a statement calling one is never served
+# from a result cache (MldbContext.cache_key)
+VOLATILE_FNS = frozenset({"now", "random", "pyeval"})
+
+
+def _nodes(node):
+    """Yield every AST node under `node` (pre-order), statements and
+    select items included: reflection over the dataclass fields reaches
+    FROM subqueries, joins, IN (SELECT …) and COLUMN EXPR clauses
+    without hand-listing node types."""
+    import dataclasses
+
+    if dataclasses.is_dataclass(node) and not isinstance(node, type):
+        yield node
+        for f in dataclasses.fields(node):
+            yield from _nodes(getattr(node, f.name))
+    elif isinstance(node, (list, tuple)):
+        for x in node:
+            yield from _nodes(x)
+
+
 def _is_const_expr(e: ast.Expr) -> bool:
     """Static constness: literal trees (and operators over them) are
     const; anything touching a column, parameter or function is not.
@@ -831,12 +855,12 @@ def _is_const_expr(e: ast.Expr) -> bool:
         # a PURE function of constant arguments is constant
         # (MLDB-1984: static_expression_info(pi()) isConstant = 1);
         # volatile / row-context functions never are
-        volatile = {
-            "now", "rowname", "rowhash", "rowpath", "rowpathelement",
+        volatile = VOLATILE_FNS | {
+            "rowname", "rowhash", "rowpath", "rowpathelement",
             "rowpathlength", "columncount", "rownumber", "totalrows",
             "leftrowname", "rightrowname", "linenumber",
             "value_timestamp", "latest_timestamp", "earliest_timestamp",
-            "group_key_element", "random", "pyeval",
+            "group_key_element",
         }
         if e.name in volatile:
             return False
@@ -2265,33 +2289,17 @@ def _column_expr_stat_needs(item: "ast.ColumnExprItem") -> "tuple[bool, bool]":
     metadata (columnName(), columnPathLength(), dtype, ...) needs no
     data pass at all. Generic dataclass walk so every expression
     node — including ones added later — is covered conservatively."""
-    import dataclasses
-
-    needs = {"counts": False, "distinct": False}
-
-    def walk(node):
+    need_counts = need_distinct = False
+    for node in _nodes([item.where, [o.expr for o in item.order_by], item.as_expr]):
         if isinstance(node, ast.FunctionCall) and node.name == "rowcount":
-            needs["counts"] = True
+            need_counts = True
         if isinstance(node, ast.ColumnRef):
             nm = node.name.lower()
             if nm in ("rowcount", "n_nonnull"):
-                needs["counts"] = True
+                need_counts = True
             elif nm == "n_distinct_approx":
-                needs["distinct"] = True
-        if dataclasses.is_dataclass(node) and not isinstance(node, type):
-            for f in dataclasses.fields(node):
-                walk(getattr(node, f.name))
-        elif isinstance(node, (list, tuple)):
-            for x in node:
-                walk(x)
-
-    for e in (
-        ([item.where] if item.where is not None else [])
-        + [o.expr for o in item.order_by]
-        + ([item.as_expr] if item.as_expr is not None else [])
-    ):
-        walk(e)
-    return needs["counts"], needs["distinct"]
+                need_distinct = True
+    return need_counts, need_distinct
 
 
 def _contains_aggregate(e: ast.Expr) -> bool:
@@ -2584,6 +2592,37 @@ class MldbContext:
         self._meta: dict[str, dict[str, str | None]] = {}
         self._functions: dict[str, object] = {}
         self._cells: dict[str, dict[str, object]] = {}
+        # name -> stamp of its latest write (register, register_cells,
+        # drop); one counter for all names, so a stamp is never reused
+        self._versions: dict[str, int] = {}
+        self._stamps = itertools.count(1)
+        self._write_lock = threading.Lock()
+
+    def _write(self, name: str, df=None, meta=None, cells=None) -> None:
+        """The one dataset write path: stamp `name` with the next
+        version and forget everything registered under it — its
+        previous view, row-name metadata and cell layout, and any
+        merged cell view built over it — before storing the new
+        registration (`df` None: a drop)."""
+        with self._write_lock:
+            self._versions[name] = next(self._stamps)
+            stale = [name] + [
+                k for k, info in list(self._cells.items())
+                if name in info.get("members", ())  # type: ignore[operator]
+            ]
+            for k in stale:
+                self._datasets.pop(k, None)
+                self._meta.pop(k, None)
+                self._cells.pop(k, None)
+            if df is not None:
+                self._datasets[name] = df
+                self._meta[name] = meta
+                if cells is not None:
+                    self._cells[name] = cells
+
+    def drop(self, name: str) -> None:
+        """Unregister a dataset (no-op for an unknown name)."""
+        self._write(name)
 
     def register(
         self,
@@ -2598,8 +2637,7 @@ class MldbContext:
         schema-normalization round-trip per table (~0.1s each) even
         for queries touching one table — a lazy provider defers that
         to first reference and unreferenced tables cost nothing."""
-        self._datasets[name] = df
-        self._meta[name] = {"rowName": row_name_col, "ts": ts_col}
+        self._write(name, df, {"rowName": row_name_col, "ts": ts_col})
 
     def _resolve(self, name: str) -> DataFrame:
         """Materialize a lazily-registered dataset provider (at most
@@ -2619,6 +2657,7 @@ class MldbContext:
         value_col: str = "value",
         ts_col: str = "ts",
         numeric_columns: "set[str] | None" = None,
+        members: tuple[str, ...] = (),
     ) -> None:
         """Register a TEMPORAL dataset from the cell layout (row,
         column, value, ts) — the sparse.mutable / beh shape where a
@@ -2629,13 +2668,16 @@ class MldbContext:
         394): plain column references and WHERE read each cell at
         GET_LATEST (the wide arg-max view this method registers), and
         the temporal_* family reduces over the cell's full
-        superposition per ROW — rewritten in `_statement` to
+        superposition per ROW — rewritten in `statement` to
         per-(row,column) aggregations over the raw cells joined back
         to the latest view.
 
         Scale shape: the wide view is one partial-agg shuffle (max_by
         per (row, column), conditional-agg pivot on row); the distinct
         column list is collected once with the AS-* spread cap.
+
+        `members`: the cells datasets a merged view is built from; a
+        write to any of them drops this registration.
         """
         from mldb_spark.operators.temporal import latest_cells
 
@@ -2680,16 +2722,15 @@ class MldbContext:
             # every recorded row was column-less (MLDBFB-440): the
             # dataset still has rows — just no value columns
             wide = latest.select(F.col(row_col).alias("__cellsRow")).distinct()
-        self._datasets[name] = wide
-        self._meta[name] = {"rowName": "__cellsRow", "ts": None}
-        self._cells[name] = {
+        self._write(name, wide, {"rowName": "__cellsRow", "ts": None}, {
             "cells": cells,
             "row": row_col,
             "column": column_col,
             "value": value_col,
             "ts": ts_col,
             "columns": cols,
-        }
+            "members": members,
+        })
 
     def _register_merged_cells(self, name: str, members: list[str]) -> None:
         """merged dataset over CELLS members (builtin/merged_dataset.cc;
@@ -2733,7 +2774,9 @@ class MldbContext:
                     numeric.add(c)
                 else:
                     stringish.add(c)
-        self.register_cells(name, cells, numeric_columns=numeric - stringish)
+        self.register_cells(
+            name, cells, numeric_columns=numeric - stringish, members=tuple(members)
+        )
 
     def register_function(self, name: str, fn) -> None:
         """Applied-function entity usable from SQL: `fn({…})[output]`
@@ -2755,7 +2798,7 @@ class MldbContext:
             )
         self._functions[low] = fn
 
-    def _lookup_function(self, name: str):
+    def lookup_function(self, name: str):
         """Resolve an applied-function name: context-local first, then
         the global ML registry — so a model trained through
         ml.procedures (classifier_train, kmeans_train, …) is callable
@@ -2777,7 +2820,7 @@ class MldbContext:
         another function's argument row (MLDB-1273/1314 composition):
         materialize its row-literal args, run the transform once, and
         return (df, its new output columns)."""
-        fn = self._lookup_function(call.name)
+        fn = self.lookup_function(call.name)
         call_params: dict[str, object] = {}
         if call.args and isinstance(call.args[0], ast.RowLiteral):
             abinder = Binder(df.columns, params, dtypes=dict(df.dtypes))
@@ -2807,7 +2850,7 @@ class MldbContext:
         for fname_, fexpr in rl.fields:
             if (
                 isinstance(fexpr, ast.FunctionCall)
-                and self._lookup_function(fexpr.name) is not None
+                and self.lookup_function(fexpr.name) is not None
             ):
                 df, outs = self._apply_fn_for_value(
                     df, fexpr, params, arg_cols
@@ -2877,7 +2920,7 @@ class MldbContext:
                 if (
                     isinstance(_n, ast.Index)
                     and isinstance(_n.operand, ast.FunctionCall)
-                    and self._lookup_function(_n.operand.name) is not None
+                    and self.lookup_function(_n.operand.name) is not None
                     and isinstance(_n.key, ast.Literal)
                 ):
                     indexed_keys.setdefault(_n.operand.name, set()).add(
@@ -2892,7 +2935,7 @@ class MldbContext:
                 if (
                     isinstance(node, ast.Index)
                     and isinstance(node.operand, ast.FunctionCall)
-                    and self._lookup_function(node.operand.name) is not None
+                    and self.lookup_function(node.operand.name) is not None
                     and isinstance(node.key, (ast.Literal, ast.ColumnRef))
                 ):
                     fname = node.operand.name
@@ -2902,7 +2945,7 @@ class MldbContext:
                         if (
                             args
                             and isinstance(args[0], ast.FunctionCall)
-                            and self._lookup_function(args[0].name)
+                            and self.lookup_function(args[0].name)
                             is not None
                         ):
                             # direct composition: the argument IS a
@@ -2974,7 +3017,7 @@ class MldbContext:
                                 shadow[k] = sh
                         before = set(df.columns)
                         df = _call_fn(
-                            self._lookup_function(fname), df, call_params
+                            self.lookup_function(fname), df, call_params
                         )
                         applied.add(fname)
                         fn_intro.extend(
@@ -3031,13 +3074,13 @@ class MldbContext:
                     for sub in _walk(node.operand):
                         if (
                             isinstance(sub, ast.FunctionCall)
-                            and self._lookup_function(sub.name) is not None
+                            and self.lookup_function(sub.name) is not None
                         ):
                             accessed.add(id(sub))
             for node in _walk(expr):
                 if (
                     isinstance(node, ast.FunctionCall)
-                    and self._lookup_function(node.name) is not None
+                    and self.lookup_function(node.name) is not None
                     and id(node) not in accessed
                 ):
                     raise ValueError(
@@ -3059,7 +3102,7 @@ class MldbContext:
             if (
                 it.alias in ("*", None)
                 and isinstance(it.expr, ast.FunctionCall)
-                and self._lookup_function(it.expr.name) is not None
+                and self.lookup_function(it.expr.name) is not None
             ):
                 fname = it.expr.name
                 args = it.expr.args
@@ -3100,7 +3143,7 @@ class MldbContext:
                             df = df.withColumn(field_name, abinder.bind(fexpr))
                             arg_cols.append(field_name)
                 before = set(df.columns)
-                df = _call_fn(self._lookup_function(fname), df, call_params)
+                df = _call_fn(self.lookup_function(fname), df, call_params)
                 applied.add(fname)
                 outs = [c for c in df.columns if c not in before]
                 if outs == ["output"] and dict(df.dtypes)["output"].startswith(
@@ -3136,7 +3179,7 @@ class MldbContext:
                 for sub in _walk(it.expr):
                     if (
                         isinstance(sub, ast.FunctionCall)
-                        and self._lookup_function(sub.name) is not None
+                        and self.lookup_function(sub.name) is not None
                     ):
                         accessed.add(id(sub))
                 continue
@@ -3190,7 +3233,29 @@ class MldbContext:
         )
 
     def query(self, sql: str, params: dict[str, object] | None = None) -> DataFrame:
-        return self._statement(parse_statement(sql), params or {})
+        return self.statement(parse_statement(sql), params or {})
+
+    def cache_key(self, sql: str) -> "tuple[tuple[str, int], ...] | None":
+        """The (name, version) pair of every dataset `sql` names anywhere
+        (FROM, joins, subqueries), sorted: together with the SQL text it
+        identifies the answer, since a dataset only changes through the
+        write path, which moves its version on. None when the answer can
+        change with no dataset write — the statement reads a table
+        function, calls a VOLATILE_FNS function, or calls a registered
+        function (a context-local one or a GLOBAL_REGISTRY model, which
+        can be replaced under the same name). A statement that does not
+        parse raises the error query() would."""
+        names = set()
+        for node in _nodes(parse_statement(sql)):
+            if isinstance(node, ast.TableFunction):
+                return None
+            if isinstance(node, ast.TableRef):
+                names.add(node.name)
+            elif isinstance(node, ast.FunctionCall) and (
+                node.name in VOLATILE_FNS or self.lookup_function(node.name) is not None
+            ):
+                return None
+        return tuple((n, self._versions.get(n, 0)) for n in sorted(names))
 
     def view(self, name: str) -> DataFrame:
         """A registered dataset as `SELECT *` sees it: without the
@@ -3255,7 +3320,7 @@ class MldbContext:
         try:
             names = [
                 r["__rn"]
-                for r in self._statement(rn_stm, {}).limit(limit).collect()
+                for r in self.statement(rn_stm, {}).limit(limit).collect()
             ]
         except Exception:
             return None
@@ -3283,7 +3348,7 @@ class MldbContext:
             return self.spark.range(1).drop("id"), None, None, set(), {}
         if isinstance(src, ast.SelectStatement):
             aliases = {src.from_alias} if getattr(src, "from_alias", None) else set()
-            sub = self._statement(src, params)
+            sub = self.statement(src, params)
             # a NAMED subquery carries its row names out — the outer
             # scope's rowName()/rowPath() read them (MLDB-1678's
             # `select * from (select 1 as x named 'msnbc.com') where
@@ -3357,7 +3422,7 @@ class MldbContext:
                 ast.TableFunction(a.name, list(a.args), None), params
             )
         if isinstance(a, ast.SelectStatement):
-            return self._statement(a, params)
+            return self.statement(a, params)
         raise ValueError(f"expected a dataset argument, got {a!r}")
 
     def _table_function(self, tf: ast.TableFunction, params=None) -> DataFrame:
@@ -3750,7 +3815,7 @@ class MldbContext:
             df, meta = self._table(node.name)
             return df, node.alias or node.name, meta["rowName"]
         if isinstance(node, ast.SelectStatement):
-            sdf = self._statement(node, params)
+            sdf = self.statement(node, params)
             rn = "rowName" if "rowName" in sdf.columns else None
             if rn is None and node.from_ is None:
                 # constant selects produce one row named 'result'
@@ -4203,7 +4268,9 @@ class MldbContext:
             stm, select=new_select, where=new_where, order_by=new_order
         )
 
-    def _statement(self, stm: ast.SelectStatement, params) -> DataFrame:
+    def statement(self, stm: ast.SelectStatement, params) -> DataFrame:
+        """Lower a parsed statement to a DataFrame (query() without the
+        parse)."""
         if stm.from_ is None:
             if any(isinstance(it, ast.Wildcard) for it in stm.select):
                 # MLDB-1732: the reference rejects SELECT * with no table
@@ -4292,7 +4359,7 @@ class MldbContext:
             residual: list[ast.Expr] = []
             for conj in _conjuncts(stm.where):
                 if isinstance(conj, ast.InSelect):
-                    sub = self._statement(conj.subquery, params)
+                    sub = self.statement(conj.subquery, params)
                     if len(sub.columns) != 1:
                         raise ValueError("IN (SELECT …) needs a 1-column subquery")
                     how = "left_anti" if conj.negated else "left_semi"
@@ -4784,7 +4851,7 @@ class MldbContext:
         # Phase 1 touches the DATA only for the stats the clause
         # expressions actually reference (optimization r9): a
         # name/type-only COLUMN EXPR (q69, qa29 — the common
-        # reference idiom) runs zero data jobs here; rowCount()
+        # reference idiom) makes no pass over the data here; rowCount()
         # pulls per-column counts; only an explicit
         # n_distinct_approx reference pays the per-column HLL
         # sketches over the scan.

@@ -358,7 +358,7 @@ def column_stats(
     This is phase 1 of COLUMN EXPR (reference SelectColumnExpression,
     sql/sql_expression_operations.h:560-601; doc SelectExpression.md:
     44-128): columns become a queryable table. One wide aggregate job
-    regardless of column count — and NO data job at all when the
+    regardless of column count — and no pass over the data when the
     caller's clause expressions reference only name/type metadata
     (optimization r9: a name-only COLUMN EXPR over a fact table was
     paying one approx_count_distinct sketch PER COLUMN over the whole
@@ -366,7 +366,13 @@ def column_stats(
     columns by name). need_counts covers rowCount/n_nonnull,
     need_distinct covers n_distinct_approx; unneeded stats surface as
     NULL, so a clause that does reference them without requesting
-    them fails loudly rather than silently using stale numbers."""
+    them fails loudly rather than silently using stale numbers.
+
+    The stats frame is a local relation (an inline VALUES table whose
+    cells arrive as bound parameters, never spliced into the SQL text):
+    filtering, sorting and collecting it stays in the JVM, where a
+    frame built from a Python list would ship its rows through a
+    Python-RDD conversion on every call."""
     cols = list(columns or df.columns)
     row = None
     if need_counts or need_distinct:
@@ -380,20 +386,29 @@ def column_stats(
                     F.approx_count_distinct(F.col(f"`{c}`")).alias(f"__d{i}")
                 )
         row = df.agg(*aggs).collect()[0]
+    schema = "columnName string, dtype string, rowCount long, n_nonnull long, n_distinct_approx long"
+    if not cols:
+        return df.sparkSession.createDataFrame([], schema)
     dtypes = dict(df.dtypes)
-    data = [
-        (
-            c,
-            dtypes[c],
-            row["__rows"] if row is not None else None,
-            row[f"__n{i}"] if need_counts else None,
-            row[f"__d{i}"] if need_distinct else None,
+    args: dict[str, object] = {}
+    values = []
+    for i, c in enumerate(cols):
+        args.update({
+            f"c{i}": c,
+            f"t{i}": dtypes[c],
+            f"r{i}": row["__rows"] if row is not None else None,
+            f"n{i}": row[f"__n{i}"] if need_counts else None,
+            f"d{i}": row[f"__d{i}"] if need_distinct else None,
+        })
+        values.append(
+            f"(:c{i}, :t{i}, CAST(:r{i} AS BIGINT), CAST(:n{i} AS BIGINT), "
+            f"CAST(:d{i} AS BIGINT))"
         )
-        for i, c in enumerate(cols)
-    ]
-    return df.sparkSession.createDataFrame(
-        data,
-        "columnName string, dtype string, rowCount long, n_nonnull long, n_distinct_approx long",
+    # named markers: positional ones are misbound in a multi-row VALUES
+    return df.sparkSession.sql(
+        f"SELECT * FROM VALUES {', '.join(values)} "
+        "AS t(columnName, dtype, rowCount, n_nonnull, n_distinct_approx)",
+        args=args,
     )
 
 
@@ -421,7 +436,7 @@ def column_expr(
     # need-based stats (optimization r9, mirroring the dialect path's
     # _column_expr_stat_needs): scan the clause expressions' rendered
     # form for references to the data-derived stat columns — a
-    # name/type-only selection then runs ZERO data jobs. Substring
+    # name/type-only selection then makes no pass over the data. Substring
     # matching can only over-request (attribute names appear verbatim
     # in the rendered expression), never under-request.
     clauses: list = []

@@ -19,12 +19,26 @@ reference's behavior too (its REST returns the whole result; RAM-
 bound by design, doc/builtin/Scaling.md). A row cap (default 10k,
 `?limit=` to lower it) guards the façade; batch-scale outputs go
 through transform + parquet sinks, not HTTP.
+
+Result cache: `run_query` — behind `GET /v1/query`, `POST /v1/query`
+and `POST /v1/redirect/get` — keeps the rendered answers in one LRU
+per server, bounded by RESULT_CACHE_ROWS rows in total. The key is
+the request's `q`, `limit`, `format`, `rowNames` and `headers` plus
+the version of every dataset the statement names
+(`MldbContext.cache_key`), so a hit skips bind, the Spark jobs and
+render. Registering a dataset again, committing a mutable one, or
+dropping it moves its version on: every entry over the old version
+becomes unreachable and ages out of the LRU. Never cached: errors,
+and statements whose answer can change with no dataset write — a
+table function in FROM, a call to `now`, `random` or `pyeval`, or a
+call to a registered function.
 """
 
 from __future__ import annotations
 
 import json
 import threading
+from collections import OrderedDict
 from dataclasses import dataclass
 from datetime import date, datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -35,6 +49,8 @@ from urllib.parse import parse_qs, urlparse
 from mldb_spark.api import Mldb
 
 DEFAULT_ROW_CAP = 10_000
+# total rows (an answer counts at least one) the result cache holds
+RESULT_CACHE_ROWS = 50_000
 
 
 def _jsonable(v):
@@ -155,6 +171,38 @@ def render_rows(rows, columns, fmt="full", row_names=False, headers=True):
 
 
 
+class _ResultCache:
+    """LRU of rendered query answers bounded by their total row count;
+    thread-safe (the server runs a thread per request)."""
+
+    def __init__(self, max_rows: int):
+        self.max_rows = max_rows
+        self._entries: OrderedDict = OrderedDict()  # key -> (answer, rows)
+        self._rows = 0
+        self._lock = threading.Lock()
+
+    def get(self, key) -> "tuple[object, int] | None":
+        with self._lock:
+            entry = self._entries.get(key)
+            if entry is not None:
+                self._entries.move_to_end(key)
+            return entry
+
+    def put(self, key, answer, rows: int) -> None:
+        rows = max(rows, 1)
+        if rows > self.max_rows:
+            return
+        with self._lock:
+            old = self._entries.pop(key, None)
+            if old is not None:
+                self._rows -= old[1]
+            self._entries[key] = (answer, rows)
+            self._rows += rows
+            while self._rows > self.max_rows:
+                _, (_, n) = self._entries.popitem(last=False)
+                self._rows -= n
+
+
 class HttpError(Exception):
     """An error answer that carries its own status code."""
 
@@ -272,6 +320,7 @@ class MldbRestServer:
     def __init__(self, mldb: Mldb, port: int = 0, row_cap: int = DEFAULT_ROW_CAP):
         self.mldb = mldb
         self.row_cap = row_cap
+        self._results = _ResultCache(RESULT_CACHE_ROWS)
         # python plugins with custom routes (MLDB-444): id -> {routes
         # source, config}
         self.plugins: dict[str, dict] = {}
@@ -465,6 +514,8 @@ class MldbRestServer:
     # -- query execution ----------------------------------------------------
 
     def run_query(self, params: dict[str, str]):
+        """Answer a query request from the result cache, or run and
+        render it and cache the answer (see the module docstring)."""
         sql = params.get("q")
         if not sql:
             raise ValueError("missing q parameter")
@@ -472,6 +523,20 @@ class MldbRestServer:
         fmt = params.get("format", "full")
         row_names = str(params.get("rowNames", "0")).lower() in ("1", "true")
         headers = str(params.get("headers", "1")).lower() not in ("0", "false")
+        # the versions are read BEFORE the query runs: a write racing it
+        # moves them on, so its answer lands under an unreachable key
+        versions = self.mldb.ctx.cache_key(sql)
+        key = None if versions is None else (sql, limit, fmt, row_names, headers, versions)
+        hit = self._results.get(key)
+        if hit is not None:
+            return hit[0]
+        answer, rows = self._answer(sql, limit, fmt, row_names, headers)
+        if key is not None:
+            self._results.put(key, answer, rows)
+        return answer
+
+    def _answer(self, sql: str, limit: int, fmt: str, row_names: bool, headers: bool):
+        """(rendered answer, its row count) of a query."""
         if fmt in ("full", ""):
             # over a cells dataset FULL returns every timestamped tuple
             # of a cell, not just the latest value (MLDB-605/679)
@@ -486,11 +551,12 @@ class MldbRestServer:
                         ],
                     }
                     for name, tuples in cells
-                ]
+                ], len(cells)
         df = self.mldb.query(sql).limit(limit)
+        rows = df.collect()
         return render_rows(
-            df.collect(), df.columns, fmt=fmt, row_names=row_names, headers=headers
-        )
+            rows, df.columns, fmt=fmt, row_names=row_names, headers=headers
+        ), len(rows)
 
     # -- lifecycle ----------------------------------------------------------
 

@@ -835,3 +835,221 @@ def test_record_routes_commit_like_row_wise_recording(spark):
             assert got[route] == got["rows"], route
     finally:
         srv.stop()
+
+
+def test_plain_registration_over_a_committed_mutable_name_drops_its_cells(spark):
+    """A committed sparse.mutable name registered again as a plain frame
+    answers from the new frame only: the temporal_* family must not
+    read the old cell layout (it joined a `__cellsRow` the plain frame
+    does not have)."""
+    from mldb_spark.api import Mldb
+    from mldb_spark.rest import MldbRestServer
+
+    m = Mldb(spark)
+    srv = MldbRestServer(m).start()
+    try:
+        _req(srv, "PUT", "/v1/datasets/d", {"type": "sparse.mutable"})
+        _req(srv, "POST", "/v1/datasets/d/rows",
+             {"rowName": "r1", "columns": [["a", 1, 5], ["a", 2, 6]]})
+        _req(srv, "POST", "/v1/datasets/d/commit", {})
+        q = "SELECT temporal_count(a) AS n FROM d"
+        assert _query(srv, q, format="aos") == [{"n": 2}]
+        m.create_dataset(
+            "d", spark.createDataFrame([("r1", 7)], "rowName string, a int"),
+            row_name_col="rowName",
+        )
+        assert _query(srv, q, format="aos") == [{"n": 1}]
+    finally:
+        srv.stop()
+
+
+def test_merged_cells_view_follows_a_member_recommit(spark):
+    """FROM merge(<cells>, <cells>) builds a merged cell view once;
+    registering one member's cells again must rebuild it, not serve the
+    cells the member had before."""
+    from datetime import datetime
+
+    from mldb_spark.api import Mldb
+
+    m = Mldb(spark)
+
+    def cells(name, value):
+        m.ctx.register_cells(name, spark.createDataFrame(
+            [(f"r_{name}", f"x_{name}", value, datetime(2020, 1, 1))],
+            "row string, column string, value int, ts timestamp",
+        ))
+
+    cells("a", 1)
+    cells("b", 2)
+    q = "SELECT x_a FROM merge(a, b) WHERE x_a IS NOT NULL"
+    assert m.query(q).collect()[0]["x_a"] == 1
+    cells("a", 3)
+    assert m.query(q).collect()[0]["x_a"] == 3
+
+
+# -- result cache -------------------------------------------------------------
+
+
+def _query(server, q, method="GET", **params):
+    """A /v1/query answer; raises HTTPError on an error status."""
+    from urllib.parse import urlencode
+
+    if method == "POST":
+        return _req(server, "POST", "/v1/query", {"q": q, **params})[1]
+    return _get(server, "/v1/query?" + urlencode({"q": q, **params}))[1]
+
+
+def _status(server, q, **params):
+    try:
+        _query(server, q, **params)
+        return 200
+    except urllib.error.HTTPError as e:
+        return e.code
+
+
+@pytest.fixture
+def cached(spark, monkeypatch):
+    """A fresh server over datasets `a` and `b`, counting the statements
+    that reach MldbContext.query (a cache hit never does)."""
+    from types import SimpleNamespace
+
+    from mldb_spark.api import Mldb
+    from mldb_spark.dialect import MldbContext
+    from mldb_spark.rest import MldbRestServer
+
+    calls: list[str] = []
+    query = MldbContext.query
+
+    def counting(self, sql, params=None):
+        calls.append(sql)
+        return query(self, sql, params)
+
+    monkeypatch.setattr(MldbContext, "query", counting)
+    m = Mldb(spark)
+    m.create_dataset("a", spark.createDataFrame([(1,), (2,)], "x int"))
+    m.create_dataset("b", spark.createDataFrame([(10,)], "y int"))
+    srv = MldbRestServer(m).start()
+    yield SimpleNamespace(srv=srv, mldb=m, calls=calls)
+    srv.stop()
+
+
+def test_result_cache_answers_a_repeated_query(cached):
+    q = "SELECT sum(x) AS s FROM a"
+    srv = cached.srv
+    assert _query(srv, q, format="aos") == [{"s": 3}]
+    assert _query(srv, q, format="aos") == [{"s": 3}]
+    # the same request through the body and through the redirect
+    assert _query(srv, q, method="POST", format="aos") == [{"s": 3}]
+    _, got = _req(srv, "POST", "/v1/redirect/get",
+                  {"target": "/v1/query", "body": {"q": q, "format": "aos"}})
+    assert got == [{"s": 3}]
+    assert cached.calls == [q]
+
+
+def test_result_cache_follows_dataset_writes(cached, spark):
+    q = "SELECT sum(x) AS s FROM a"
+    srv, m = cached.srv, cached.mldb
+    assert _query(srv, q, format="aos") == [{"s": 3}]
+    m.create_dataset("a", spark.createDataFrame([(5,)], "x int"))
+    assert _query(srv, q, format="aos") == [{"s": 5}]
+    m.ctx.drop("a")
+    assert _status(srv, q, format="aos") == 404
+    m.create_dataset("a", spark.createDataFrame([(5,)], "x int"))
+    assert _query(srv, q, format="aos") == [{"s": 5}]
+    assert len(cached.calls) == 4
+
+
+def test_result_cache_keeps_answers_over_other_datasets(cached, spark):
+    qa = "SELECT sum(x) AS s FROM a"
+    qab = "SELECT x FROM a WHERE x IN (SELECT y - 9 FROM b)"
+    srv, m = cached.srv, cached.mldb
+    assert _query(srv, qa, format="aos") == [{"s": 3}]
+    assert _query(srv, qab, format="aos") == [{"x": 1}]
+    m.create_dataset("b", spark.createDataFrame([(11,)], "y int"))
+    _req(srv, "PUT", "/v1/datasets/c", {"type": "sparse.mutable"})
+    _req(srv, "POST", "/v1/datasets/c/rows", {"rowName": "r", "columns": [["v", 1, 0]]})
+    _req(srv, "POST", "/v1/datasets/c/commit", {})
+    assert _query(srv, qa, format="aos") == [{"s": 3}]
+    # a statement naming b in a subquery sees the write
+    assert _query(srv, qab, format="aos") == [{"x": 2}]
+    assert cached.calls == [qa, qab, qab]
+
+
+def test_result_cache_recomputes_volatile_and_function_calls(cached):
+    from pyspark.sql import functions as F
+
+    srv, m = cached.srv, cached.mldb
+    m.ctx.register_function("plus1", lambda d: d.withColumn("out", F.col("x") + 1))
+    for q in (
+        "SELECT now() AS t",
+        "SELECT random() AS r",
+        "SELECT pyeval('x + 1', 'x', 1) AS v",
+        "SELECT plus1({x: x})[out] AS o FROM a ORDER BY o",
+    ):
+        assert m.ctx.cache_key(q) is None
+        before = len(cached.calls)
+        _status(srv, q, format="aos")
+        _status(srv, q, format="aos")
+        assert len(cached.calls) == before + 2, q
+    # table functions read datasets the key does not name
+    assert m.ctx.cache_key("SELECT * FROM transpose(a)") is None
+    assert m.ctx.cache_key("SELECT 1 AS one") == ()
+    assert [n for n, _ in m.ctx.cache_key(
+        "SELECT x FROM a JOIN b ON a.x = b.y"
+    )] == ["a", "b"]
+
+
+def test_result_cache_does_not_store_errors(cached, spark):
+    q = "SELECT count(*) AS n FROM later"
+    srv, m = cached.srv, cached.mldb
+    assert _status(srv, q, format="aos") == 404
+    m.create_dataset("later", spark.createDataFrame([(1,)], "z int"))
+    assert _query(srv, q, format="aos") == [{"n": 1}]
+
+
+def test_result_cache_keys_on_format_and_limit(cached):
+    q = "SELECT x FROM a ORDER BY x"
+    srv = cached.srv
+    want = {
+        (("format", "aos"),): [{"x": 1}, {"x": 2}],
+        (("format", "table"),): [["x"], [1], [2]],
+        (("format", "aos"), ("limit", 1)): [{"x": 1}],
+        (("format", "aos"), ("limit", 2)): [{"x": 1}, {"x": 2}],
+    }
+    for _ in range(2):
+        for params, answer in want.items():
+            assert _query(srv, q, **dict(params)) == answer
+    assert len(cached.calls) == len(want)
+
+
+def test_result_cache_row_bound_holds_under_concurrent_use():
+    """Request threads share one cache: under interleaved puts and gets
+    the row total stays the sum of the entries and within its bound."""
+    import random
+    import sys
+    import threading
+
+    from mldb_spark.rest import _ResultCache
+
+    cache = _ResultCache(max_rows=100)
+
+    def worker(seed):
+        rng = random.Random(seed)
+        for _ in range(2_000):
+            key = rng.randrange(40)
+            if cache.get(key) is None:
+                cache.put(key, [key], rng.randrange(0, 30))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert cache._rows == sum(n for _, n in cache._entries.values()) <= 100
+    assert all(answer == [key] for key, (answer, _) in cache._entries.items())
